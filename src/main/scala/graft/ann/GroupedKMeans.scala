@@ -199,27 +199,24 @@ object GroupedKMeans {
       while (i < a.length) { val x = a(i).toDouble - q(i).toDouble; s += x * x; i += 1 }
       s
     }
-    val roles = Rbac.userRoles(spark, dir).filter(col("user_id") === userId)
-      .collect().map(_.getLong(1)).toSet // tiny: the user's 1-2 roles
+    val roles = Rbac.roleSet(spark, dir, userId)
+      .collect().map(_.getLong(0)).toSet // tiny: the user's 1-2 roles
     // probe pick per role over the tiny collected centroid set
     val probed = cents.filter(c => roles.contains(c._1))
       .groupBy(_._1).iterator.flatMap { case (_, cs) =>
         cs.sortBy(c => (d2(c._3), c._2)).take(nprobe).iterator
       }.map(c => (c._1, c._2)).toSet
     import spark.implicits._
-    val centDf = centroidFrame(spark, dir, k, iters)
-      .filter(col("group").isin(roles.toSeq.map(Long.box): _*))
+    val inRoles = col("group").isin(roles.toSeq.map(Long.box): _*)
+    val centDf = centroidFrame(spark, dir, k, iters).filter(inRoles)
     val probedDf = probed.toSeq.toDF("group", "cid")
-    assign(rolePoints(spark, dir).filter(col("group").isin(roles.toSeq.map(Long.box): _*)),
-      centDf)
+    val cands = assign(rolePoints(spark, dir).filter(inRoles), centDf)
       .join(broadcast(probedDf), Seq("group", "cid"), "left_semi") // cell pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("qd", l2_dist(col("vec"), col("qvec")))
-      .groupBy(col("id").as("block_id"))
-      .agg(min("qd").as("qd")) // block dedup across role partitions
-      .orderBy(col("qd"), col("block_id"))
-      .limit(topk)
-      .select("block_id")
+      .select(col("id").as("block_id"), col("vec").as("embedding"))
+    val deduped = Rbac.scored(spark, dir, cands)
+      .groupBy("block_id")
+      .agg(min("dist").as("dist")) // block dedup across role partitions
+    Rbac.topK(deduped, topk).select("block_id")
   }
 
   /** B21 model-driven serving: nprobe picked from the fitted

@@ -442,8 +442,7 @@ object IvfIndex {
     */
   def qdTreeSearch(spark: SparkSession, dir: String, userId: Long, k: Int = 8,
                    nprobe: Int = 0, topk: Int = 10): DataFrame = {
-    val ur = graft.rbac.Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId).select("role_id")
+    val ur = graft.rbac.Rbac.roleSet(spark, dir, userId)
     // leaf signatures intersecting the user's roles (tiny: ≤ #combs)
     val routedSigs = graft.rbac.Rbac.permissions(spark, dir)
       .join(graft.rbac.Partitioned.combKeys(spark, dir), "document_id")
@@ -463,13 +462,7 @@ object IvfIndex {
       base.withColumn("cell", nearest_centroid(col("embedding"), idx.centroids))
         .filter(col("cell").isin(lists: _*)).drop("cell")
     } else base
-    routed
-      .crossJoin(broadcast(
-        Tables.embeddings(spark, dir).filter(col("vec_id") === 0)
-          .select(col("embedding").as("qvec"))))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(topk)
+    graft.rbac.Rbac.topK(graft.rbac.Rbac.scored(spark, dir, routed), topk)
       .select("block_id", "document_id")
   }
 }

@@ -337,12 +337,13 @@ object Analytics {
           .withColumn("off", coalesce(sum("cnt").over(
             Window.partitionBy("event_type").orderBy("__pid")
               .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("__pid"), col("event_type").as("__ot"), col("off"))
+          .select(col("__pid").as("__opid"), col("event_type").as("__ot"), col("off"))
         local.join(broadcast(offsets),
-            local("__pid") === offsets("__pid") &&
-              local("event_type") <=> offsets("__ot"))
-          .withColumn("rn", (col("off") + col("lrn")).cast("int"))
-          .select(local("event_type"), col("value"), col("rn"))
+            col("__pid") === col("__opid") && col("event_type") <=> col("__ot"))
+          // a long rank: an int wraps past 2^31 rows per type, the regime
+          // this branch exists for (rn only meets lo + 1 and lo + 2 in q)
+          .withColumn("rn", col("off") + col("lrn"))
+          .select(col("event_type"), col("value"), col("rn"))
       }
     val ranked = ranked0
       .join(broadcast(counts.withColumnRenamed("event_type", "__et")),

@@ -3,8 +3,6 @@ package graft.rbac
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.vector._
-
 /** Hierarchical (ERBAC-style) RBAC — role TREES with inherited
   * permissions, the enterprise shape the reference's workload
   * generators build (services/rbac_generator/
@@ -88,15 +86,18 @@ object Hierarchy {
     * the flat derivation routed through the expanded role set
     * (held roles → all subtree roles → grants, DISTINCT at doc level).
     */
-  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame = {
-    val effective = effectiveUserRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .select("role_id").distinct()
-    Rbac.permissions(spark, dir)
-      .join(broadcast(effective), "role_id")
-      .select("document_id")
+  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    docsVia(spark, dir, effectiveUserRoles(spark, dir), userId)
+
+  /** The flat accessible-doc derivation over an expanded (user_id,
+    * role_id) frame: the user's DISTINCT effective roles → grants →
+    * DISTINCT docs. Tree and DAG differ only in the frame passed.
+    */
+  private def docsVia(spark: SparkSession, dir: String, effective: DataFrame,
+                      userId: Long): DataFrame =
+    Rbac.grants(spark, dir,
+      effective.filter(col("user_id") === userId).select("role_id").distinct())
       .distinct()
-  }
 
   /** A19 step 4: the A17 cost-model layout over the HIERARCHY's
     * permission distribution — same greedy (workload weights, log-load
@@ -162,13 +163,7 @@ object Hierarchy {
     * changed.
     */
   def hierarchyTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.blocks(spark, dir)
-      .join(broadcast(accessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.prefilterOver(spark, dir, accessibleDocs(spark, dir, userId), k)
 
   // ------------------------------------------------------------------
   // DAG hierarchy: SHARED subtrees (multi-parent roles) — the
@@ -235,27 +230,14 @@ object Hierarchy {
       .distinct()
 
   /** Docs accessible to `userId` under the DAG hierarchy. */
-  def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame = {
-    val effective = dagEffectiveUserRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .select("role_id").distinct()
-    Rbac.permissions(spark, dir)
-      .join(broadcast(effective), "role_id")
-      .select("document_id")
-      .distinct()
-  }
+  def dagAccessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    docsVia(spark, dir, dagEffectiveUserRoles(spark, dir), userId)
 
   /** Exact pre-filtered top-k under the DAG hierarchy — same corpus
     * plan as `hierarchyTopK`, third permission derivation.
     */
   def dagTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    Rbac.blocks(spark, dir)
-      .join(broadcast(dagAccessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.prefilterOver(spark, dir, dagAccessibleDocs(spark, dir, userId), k)
 
   /** A17's greedy layout fed the DAG's permission distribution — the
     * THIRD structurally different input (flat / tree / shared-subtree

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
-import graft.functions.vector._
 
 /** Index/partition maintenance surface of the reference's dynamic
   * partitioning (controller/dynamic_partition/hnsw/deletion.py,
@@ -30,15 +29,10 @@ object Maintenance {
     * tombstone set inside the scan stage.
     */
   def deleteAwareTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-    Rbac.blocks(spark, dir)
+    val cands = Rbac.blocks(spark, dir)
       .join(broadcast(tombstones(spark, dir)), Seq("document_id"), "left_anti")
-      .join(broadcast(acc), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+      .join(broadcast(Rbac.accessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
+    Rbac.topK(Rbac.scored(spark, dir, cands), k).select("block_id", "document_id")
   }
 
   /** A14: heavy-partition refinement (heavy_partition_refine.py):

@@ -34,30 +34,32 @@ object Partitioned {
     * through the partitioned plan.
     */
   def rolePartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val ur = Rbac.userRoles(spark, dir).filter(col("user_id") === userId)
-      .select(col("role_id").as("partition_role"))
-    roleLayout(spark, dir)
+    val ur = Rbac.roleSet(spark, dir, userId).select(col("role_id").as("partition_role"))
+    val cands = roleLayout(spark, dir)
       .join(broadcast(ur), Seq("partition_role"), "left_semi") // partition prune
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      // merge-dedup: a block granted via 2 user roles sits in 2 role
-      // partitions with IDENTICAL distance — dedup the slim
-      // (block_id, document_id, dist) rows (map-side combined), never
-      // keying an Exchange on the 64-float embedding array
+    // merge-dedup: a block granted via 2 user roles sits in 2 role
+    // partitions with IDENTICAL distance — dedup the slim
+    // (block_id, document_id, dist) rows (map-side combined), never
+    // keying an Exchange on the 64-float embedding array
+    val deduped = Rbac.scored(spark, dir, cands)
       .groupBy("block_id", "document_id")
       .agg(min("dist").as("dist"))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.topK(deduped, k).select("block_id", "document_id")
   }
 
-  /** DOC-side granting-role sets, array + key forms — THE single
-    * definition of a document's combination (the array feeds predicate
-    * evaluation in the qd-tree build, the key is the partition id).
+  /** DOC-side granting-role sets, array + key forms (the array feeds
+    * predicate evaluation in the qd-tree build, the key is the
+    * partition id).
     */
   def combRoleSets(spark: SparkSession, dir: String): DataFrame =
-    Rbac.permissions(spark, dir)
-      .groupBy("document_id")
+    combRoleSetsOf(Rbac.permissions(spark, dir))
+
+  /** THE single definition of a document's combination, over any
+    * (role_id, document_id) permission rows — the whole table, or only
+    * the routed docs' rows in the combination-partition search.
+    */
+  private def combRoleSetsOf(perms: DataFrame): DataFrame =
+    perms.groupBy("document_id")
       .agg(sort_array(collect_set(col("role_id"))).as("roles"))
       .withColumn("comb_key", concat_ws(",", col("roles")))
 
@@ -71,42 +73,30 @@ object Partitioned {
   /** A6: combination-partition search: route to the partitions whose
     * role-set intersects the user's roles, scan only those, top-k.
     *
-    * r17 restructure (guide §3/§8; result row-identical, oracle-pinned):
-    * a partition's comb_key IS its docs' granting role set, so "comb
+    * A partition's comb_key IS its docs' granting role set, so "comb
     * intersects the user's roles" ⟺ "the doc is granted by ≥1 user
-    * role" — the routing collapses to ONE broadcast semi-join of the
-    * block scan against the user's permission rows. The old plan
-    * aggregated comb_key over the WHOLE permission table and equi-
-    * joined it onto the block scan — an Exchange carrying the
-    * embedding arrays (the §8 payload-shuffle smell) plus two corpus-
-    * wide aggregates, all to label rows of which only k survive the
-    * TakeOrdered. comb_key is now attached AFTER the top-k, by a slim
-    * per-doc aggregate over the routed docs' permission rows, with the
-    * bounded k-row side broadcast. Plan: 6 Exchanges → 1 (the comb
-    * aggregate's, slim rows), embedding arrays never shuffled.
+    * role": the routing is the prefilter's broadcast semi-join of the
+    * block scan against the user's accessible docs (result
+    * row-identical, oracle-pinned). comb_key is attached AFTER the
+    * top-k, by the comb aggregate over the routed docs' permission
+    * rows only — never over the whole permission table — joined to
+    * the broadcast k-row top and re-ranked by the core (a
+    * TakeOrderedAndProject over ≤ k rows). Plan (plans/r18): 5 shuffle
+    * Exchanges, two of them building the cached dimensions, the rest
+    * slim id rows; no Exchange carries embedding arrays.
     */
   def combPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val userRoleSet = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId).select("role_id")
     // docs in a user-relevant comb == docs granted by ≥1 user role
-    val routedDocs = Rbac.permissions(spark, dir)
-      .join(broadcast(userRoleSet), "role_id")
-      .select("document_id").distinct()
-    val top = Rbac.blocks(spark, dir)
+    val routedDocs = Rbac.accessibleDocs(spark, dir, userId)
+    val cands = Rbac.blocks(spark, dir)
       .join(broadcast(routedDocs), Seq("document_id"), "left_semi") // prune
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+    val top = Rbac.topK(Rbac.scored(spark, dir, cands), k)
       .select("block_id", "document_id", "dist")
-    // comb_key of the routed docs only (slim (doc, role) rows — the
-    // corpus-wide combKeys aggregate is gone from this path)
-    val routedKeys = Rbac.permissions(spark, dir)
-      .join(broadcast(routedDocs), Seq("document_id"), "left_semi")
-      .groupBy("document_id")
-      .agg(concat_ws(",", sort_array(collect_set(col("role_id")))).as("comb_key"))
-    routedKeys.join(broadcast(top), "document_id")
-      .orderBy(col("dist"), col("block_id"))
+    val routedKeys = combRoleSetsOf(Rbac.permissions(spark, dir)
+      .join(broadcast(routedDocs), Seq("document_id"), "left_semi"))
+      .select("document_id", "comb_key")
+    // ≤ k rows: re-ranking them restores the top-k order after the join
+    Rbac.topK(routedKeys.join(broadcast(top), "document_id"), k)
       .select("block_id", "document_id", "comb_key")
   }
 
@@ -333,17 +323,13 @@ object Partitioned {
     // prunedRoleSearch's role ids.
     val pids = routedPartitionIds(spark, dir, userId, alpha)
     val layoutPath = graft.sources.Layouts.costModelLayoutPath(spark, dir, alpha)
-    // permission filter at merge time — the shared partition holds
+    // permission filter on the candidates — the shared partition holds
     // blocks of other combs the user cannot read; the per-user doc set
     // is bounded by the prefilter family's documented assumption
-    val acc = Rbac.accessibleDocs(spark, dir, userId)
-    spark.read.parquet(layoutPath)
+    val cands = spark.read.parquet(layoutPath)
       .filter(col("partition_id").isin(pids: _*)) // directory pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .join(broadcast(acc), Seq("document_id"), "left_semi")
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
+      .join(broadcast(Rbac.accessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
+    Rbac.topK(Rbac.scored(spark, dir, cands), k)
       .select(col("block_id"), col("document_id"),
         col("partition_id").cast("int").as("partition_id"))
   }
@@ -370,14 +356,10 @@ object Partitioned {
     * no permission work at query time (the layout prepaid it). At scale
     * the partition_user filter is parquet directory pruning.
     */
-  def userPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
-    userLayout(spark, dir)
-      .filter(col("partition_user") === userId)
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+  def userPartitionTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
+    val cands = userLayout(spark, dir).filter(col("partition_user") === userId)
+    Rbac.topK(Rbac.scored(spark, dir, cands), k).select("block_id", "document_id")
+  }
 
   /** A8: batch ground truth (compute_ground_truth.py): exact top-k per
     * (user u, query vector u-1) pair for users 1..nUsers, in ONE

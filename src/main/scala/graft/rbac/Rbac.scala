@@ -20,6 +20,20 @@ import graft.functions.vector._
   *   - role r grants doc d  iff  d % 10 == r  or  (d/10) % 10 == r
   *   - block b belongs to document b (1 block per document)
   *
+  * Candidate source → rank core. Every exact permission-aware strategy
+  * (prefilter, RLS, the role / combination / dynamic / per-user
+  * partitions, the tree and DAG hierarchies, delete-aware search, the
+  * pruned role layout, the qd-trees, the per-role IVF) is a CANDIDATE
+  * SOURCE: a scan, its pruning and its permission predicate, yielding
+  * (block_id, document_id, embedding) rows. All of them rank the same
+  * way (the reference's merge_results_with_filter, search.py:114): L2
+  * distance to the query vector, `block_id` tiebreak, k rows. That
+  * ranking is written once, here — `scored` attaches the distance,
+  * `topK` orders and cuts — so the ordering invariant has one owner.
+  * Layouts that store a block more than once dedup the slim
+  * (block_id, dist) rows between the two steps. Access policy only ever
+  * decides which candidates exist; the rank core never sees it.
+  *
   * Architecture note (Spark-first, not a port): the reference prunes the
   * ANN scan with per-role PARTITION TABLES + per-table indexes
   * (controller/baseline/prefilter/initialize_partitions.py). On Spark the
@@ -72,30 +86,54 @@ object Rbac {
       .filter(col("vec_id") === 0)
       .select(col("embedding").as("qvec"))
 
+  /** The rank core, step 1: broadcast the query vector onto a
+    * candidate frame (any columns, including `embedding`) and add
+    * `dist` = L2 distance to it.
+    */
+  private[graft] def scored(spark: SparkSession, dir: String, cands: DataFrame): DataFrame =
+    cands.crossJoin(broadcast(queryVector(spark, dir)))
+      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
+
+  /** The rank core, step 2: the k nearest rows of a `scored` frame in
+    * (dist, block_id) order — the only place that ordering is written.
+    */
+  private[graft] def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("dist"), col("block_id")).limit(k)
+
+  /** The user's held roles, one `role_id` column. */
+  private[graft] def roleSet(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    userRoles(spark, dir).filter(col("user_id") === userId).select("role_id")
+
+  /** Grant rows of a role set: PermissionAssignment ⋈ broadcast(roles)
+    * → document_id, one row per granting role (NOT distinct). The flat,
+    * tree and DAG policies differ only in the role frame they pass.
+    */
+  private[graft] def grants(spark: SparkSession, dir: String, roles: DataFrame): DataFrame =
+    permissions(spark, dir)
+      .join(broadcast(roles), "role_id")
+      .select("document_id")
+
   /** Docs accessible to `userId` — prefilter step 1
     * (common_function.py:91: DISTINCT pa.document_id ⋈ UserRoles).
     */
-  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame = {
-    val ur = userRoles(spark, dir).filter(col("user_id") === userId)
-    permissions(spark, dir)
-      .join(broadcast(ur), "role_id")
-      .select("document_id")
-      .distinct()
-  }
+  def accessibleDocs(spark: SparkSession, dir: String, userId: Long): DataFrame =
+    grants(spark, dir, roleSet(spark, dir, userId)).distinct()
 
   /** Pre-filtered exact L2 top-k (common_function.py:134).
     * Plan at scale: parquet scan → broadcast semi-join on accessible docs
     * → codegen'd L2 → TakeOrderedAndProject (k rows per partition).
     */
-  def prefilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val acc = accessibleDocs(spark, dir, userId)
-    blocks(spark, dir)
-      .join(broadcast(acc), Seq("document_id"), "left_semi")
-      .crossJoin(broadcast(queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+  def prefilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
+    prefilterOver(spark, dir, accessibleDocs(spark, dir, userId), k)
+
+  /** The prefilter candidate source over any document_id frame: the
+    * blocks of those docs (broadcast semi-join), ranked by the core.
+    * The flat, tree and DAG prefilters and RLS differ only in `docs`.
+    */
+  private[rbac] def prefilterOver(spark: SparkSession, dir: String, docs: DataFrame,
+                                  k: Int): DataFrame = {
+    val cands = blocks(spark, dir).join(broadcast(docs), Seq("document_id"), "left_semi")
+    topK(scored(spark, dir, cands), k).select("block_id", "document_id")
   }
 
   /** Post-filter: global ANN top-(overfetch*k) FIRST, then permission
@@ -104,16 +142,10 @@ object Rbac {
     */
   def postfilterTopK(spark: SparkSession, dir: String, userId: Long, k: Int,
                      overfetch: Int = 10): DataFrame = {
-    val candidates = blocks(spark, dir)
-      .crossJoin(broadcast(queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k * overfetch)
-    candidates
+    val global = topK(scored(spark, dir, blocks(spark, dir)), k * overfetch)
+    val allowed = global
       .join(broadcast(accessibleDocs(spark, dir, userId)), Seq("document_id"), "left_semi")
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    topK(allowed, k).select("block_id", "document_id")
   }
 
   /** Row-level-security flavor (row_level_security.py): the permission
@@ -121,18 +153,9 @@ object Rbac {
     * UserRoles⋈PermissionAssignment — rather than materializing the doc
     * set first. Same results as prefilter; different (inline) plan.
     */
-  def rlsTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame = {
-    val grants = permissions(spark, dir)
-      .join(broadcast(userRoles(spark, dir).filter(col("user_id") === userId)), "role_id")
-      .select("document_id")
-    blocks(spark, dir)
-      .join(broadcast(grants), Seq("document_id"), "left_semi") // EXISTS(grant)
-      .crossJoin(broadcast(queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
-  }
+  def rlsTopK(spark: SparkSession, dir: String, userId: Long, k: Int): DataFrame =
+    // EXISTS(grant): the semi-join reads the raw grant rows, no DISTINCT
+    prefilterOver(spark, dir, grants(spark, dir, roleSet(spark, dir, userId)), k)
 
   /** Per-user block selectivity (common_function.py's statistics):
     * accessible blocks / total blocks, the metric the reference reports

@@ -497,19 +497,15 @@ object Layouts {
     */
   def prunedRoleSearch(spark: SparkSession, dir: String, layoutPath: String,
                        userId: Long, k: Int): DataFrame = {
-    val roleIds = Rbac.userRoles(spark, dir)
-      .filter(col("user_id") === userId)
-      .collect().map(_.getLong(1)) // tiny: the user's 1-2 roles
-    spark.read.parquet(layoutPath)
+    val roleIds = Rbac.roleSet(spark, dir, userId)
+      .collect().map(_.getLong(0)) // tiny: the user's 1-2 roles
+    val cands = spark.read.parquet(layoutPath)
       .filter(col("partition_role").isin(roleIds: _*)) // partition pruning
-      .crossJoin(broadcast(Rbac.queryVector(spark, dir)))
-      .withColumn("dist", l2_dist(col("embedding"), col("qvec")))
-      // dedup blocks duplicated across role partitions on slim columns
-      // (distance is identical per block), not on the embedding array
+    // dedup blocks duplicated across role partitions on slim columns
+    // (distance is identical per block), not on the embedding array
+    val deduped = Rbac.scored(spark, dir, cands)
       .groupBy("block_id", "document_id")
       .agg(min("dist").as("dist"))
-      .orderBy(col("dist"), col("block_id"))
-      .limit(k)
-      .select("block_id", "document_id")
+    Rbac.topK(deduped, k).select("block_id", "document_id")
   }
 }

@@ -255,12 +255,79 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("role/comb/dynamic partition searches all agree with prefilter") {
-    import graft.rbac.Rbac
-    val expect = Rbac.prefilterTopK(spark, sf, 1, 10).collect().map(_.getLong(0)).toSeq
-    val role = Partitioned.rolePartitionTopK(spark, sf, 1, 10).collect().map(_.getLong(0)).toSeq
-    val comb = Partitioned.combPartitionTopK(spark, sf, 1, 10).collect().map(_.getLong(0)).toSeq
-    val dyn = Partitioned.dynamicPartitionTopK(spark, sf, 1, 10).collect().map(_.getLong(0)).toSeq
-    assert(role == expect && comb == expect && dyn == expect)
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.ann.{GroupedKMeans, QdTree}
+    import graft.rbac.{Hierarchy, Maintenance}
+    import graft.sources.Layouts
+    // Every exact strategy against a driver-side brute force over the
+    // collected policy and blocks: the accessible blocks in
+    // (dist, block_id) order, first k. Users 0–9 cover every residue
+    // u % 10, which fixes a user's roles; k = 500 exceeds every flat
+    // accessible set at this SF.
+    val q = graft.Tables.embeddings(spark, sf).filter(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0).toArray
+    val ranked = Rbac.blocks(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), refL2(r.getSeq[Float](2).toArray, q)))
+      .sortBy { case (b, _, d) => (d, b) }
+    def pairs(df: DataFrame): Map[Long, Set[Long]] = df.collect().toSeq
+      .groupBy((r: Row) => r.getLong(0)).map { case (a, rs) => a -> rs.map(_.getLong(1)).toSet }
+    val rolesOf = pairs(Rbac.userRoles(spark, sf)).withDefaultValue(Set.empty)
+    val docsOf = pairs(Rbac.permissions(spark, sf)).withDefaultValue(Set.empty)
+    val tree = pairs(Hierarchy.roleClosure(spark))
+    val dag = pairs(Hierarchy.dagClosure(spark))
+    val dead = Maintenance.tombstones(spark, sf).collect().map(_.getLong(0)).toSet
+    def combKey(doc: Long): String =
+      docsOf.collect { case (r, ds) if ds(doc) => r }.toSeq.sorted.mkString(",")
+    def exact(acc: Long => Boolean, k: Int): Seq[Long] =
+      ranked.iterator.filter(b => acc(b._2)).map(_._1).take(k).toSeq
+    def ids(df: DataFrame): Seq[Long] = df.collect().map(_.getLong(0)).toSeq
+    def check(u: Long, k: Int): Unit = {
+      val roles = rolesOf(u)
+      val flat = roles.flatMap(docsOf)
+      val want = exact(flat, k)
+      assert(want.size == math.min(k, ranked.count(b => flat(b._2))))
+      val ctx = s"user $u, k $k"
+      Seq(
+        "prefilter" -> Rbac.prefilterTopK(spark, sf, u, k),
+        "rls" -> Rbac.rlsTopK(spark, sf, u, k),
+        "role partition" -> Partitioned.rolePartitionTopK(spark, sf, u, k),
+        "dynamic partition" -> Partitioned.dynamicPartitionTopK(spark, sf, u, k),
+        "user partition" -> Partitioned.userPartitionTopK(spark, sf, u, k),
+        "pruned role layout" -> Layouts.prefilterPruned(spark, sf, u, k),
+        "qd-tree routed" -> IvfIndex.qdTreeSearch(spark, sf, u, topk = k),
+        "greedy qd-tree" -> QdTree.routedTopK(spark, sf, u, k),
+        "per-role IVF, every cell probed" ->
+          GroupedKMeans.partitionIvfTopK(spark, sf, u, k, k = 4, nprobe = 4)
+      ).foreach { case (name, df) => assert(ids(df) == want, s"$name, $ctx") }
+      val comb = Partitioned.combPartitionTopK(spark, sf, u, k).collect()
+      assert(comb.map(_.getLong(0)).toSeq == want, s"comb partition, $ctx")
+      assert(comb.forall(r => r.getString(2) == combKey(r.getLong(1))), s"comb_key, $ctx")
+      assert(ids(Maintenance.deleteAwareTopK(spark, sf, u, k)) ==
+        exact(d => flat(d) && !dead(d), k), s"delete-aware, $ctx")
+      val treeDocs = roles.flatMap(tree).flatMap(docsOf)
+      assert(ids(Hierarchy.hierarchyTopK(spark, sf, u, k)) == exact(treeDocs, k), s"hierarchy, $ctx")
+      val dagDocs = roles.flatMap(dag).flatMap(docsOf)
+      assert(ids(Hierarchy.dagTopK(spark, sf, u, k)) == exact(dagDocs, k), s"DAG, $ctx")
+      // post-filter: ≤ k rows, all accessible, in order — exactly the
+      // accessible blocks of the global top-10k
+      val post = ids(Rbac.postfilterTopK(spark, sf, u, k))
+      val pos = ranked.map(_._1).zipWithIndex.toMap
+      assert(post.size <= k && post.forall(flat), s"postfilter, $ctx")
+      assert(post.map(pos) == post.map(pos).sorted, s"postfilter order, $ctx")
+      assert(post == ranked.take(10 * k).filter(b => flat(b._2)).map(_._1).take(k).toSeq,
+        s"postfilter window, $ctx")
+    }
+    val cases = for (u <- 0L to 9L; k <- Seq(10, 500)) yield (u, k)
+    check(cases.head._1, cases.head._2) // alone first: builds every layout and index once
+    // the rest four at a time, as Bench's pool serves them; a failed
+    // assert surfaces through get()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val runs = cases.tail.map { case (u, k) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] { def call(): Unit = check(u, k) })
+      }
+      runs.foreach(_.get())
+    } finally pool.shutdown()
   }
 
   test("qd-tree signature routing is lossless: routed search = prefilter") {
